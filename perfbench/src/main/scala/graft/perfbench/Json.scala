@@ -1,0 +1,34 @@
+package graft.perfbench
+
+/** Minimal JSON writer for the harness's result and trace files. */
+object Json {
+  /** Pre-serialized JSON, inserted as is. */
+  final case class Raw(json: String)
+
+  def obj(fields: (String, Any)*): String =
+    fields.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+
+  def value(v: Any): String = v match {
+    case null | None         => "null"
+    case Some(x)             => value(x)
+    case Raw(j)              => j
+    case s: String           => str(s)
+    case b: Boolean          => b.toString
+    case d: Double           => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int              => n.toString
+    case n: Long             => n.toString
+    case m: Map[_, _]        => m.map { case (k, x) => str(k.toString) + ":" + value(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_]     => xs.map(value).mkString("[", ",", "]")
+    case other               => str(other.toString)
+  }
+
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}
